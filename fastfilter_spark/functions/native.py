@@ -1,8 +1,8 @@
 """Optional native (C) kernel loader for the filter hot loops.
 
 Compiles fastfilter_spark/native/ffkernel.c on first use with the system
-C compiler into a content-addressed cached .so (atomic rename, safe for
-concurrent executor python workers on one host) and exposes thin
+C compiler into a .so cached per source and CPU ISA (atomic rename, safe
+for concurrent executor python workers on one host) and exposes thin
 ctypes wrappers.  Everything degrades gracefully: if no compiler / the
 compile fails, ``get_kernel()`` returns None and callers fall back to
 the numpy implementations in operators/local.py.  The two paths are
@@ -16,6 +16,7 @@ from __future__ import annotations
 import ctypes
 import hashlib
 import os
+import platform
 import subprocess
 import tempfile
 
@@ -49,13 +50,30 @@ def _read_source() -> bytes:
             .read_bytes()
 
 
+def _isa() -> str:
+    """Machine plus CPU feature flags ("" without /proc/cpuinfo)."""
+    try:
+        with open("/proc/cpuinfo") as f:
+            flags = next((ln for ln in f
+                          if ln.startswith(("flags", "Features"))), "")
+    except OSError:
+        flags = ""
+    return f"{platform.machine()}:{flags.partition(':')[2].strip()}"
+
+
+def _so_path(src: bytes, isa: str) -> str:
+    """The .so is built with -march=native: executors on different CPUs
+    sharing one home directory must not load each other's (SIGILL)."""
+    tag = hashlib.sha256(src + b"\0" + isa.encode()).hexdigest()[:16]
+    return os.path.join(
+        os.environ.get("XDG_CACHE_HOME", os.path.expanduser("~/.cache")),
+        "fastfilter_spark", f"ffkernel-{tag}.so")
+
+
 def _compile() -> str | None:
     src = _read_source()
-    tag = hashlib.sha256(src).hexdigest()[:16]
-    cache_dir = os.path.join(
-        os.environ.get("XDG_CACHE_HOME", os.path.expanduser("~/.cache")),
-        "fastfilter_spark")
-    so_path = os.path.join(cache_dir, f"ffkernel-{tag}.so")
+    so_path = _so_path(src, _isa())
+    cache_dir = os.path.dirname(so_path)
     if os.path.exists(so_path):
         return so_path
     os.makedirs(cache_dir, exist_ok=True)

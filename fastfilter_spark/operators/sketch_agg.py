@@ -287,33 +287,24 @@ def bloom_contains_udf(bloom: Bloom, spark=None,
     same column TYPE as the build: Spark's xxhash64 of a long and of
     its string form differ.
 
-    Wire bytes are broadcast once, deserialized at most once per python
-    worker (bounded cache shared with the filter probes); no driver-side
-    collect of probe keys, so ``df.where(bloom_contains_udf(b, spark)
-    (col))`` scales with executor count, not driver memory.
+    Wire bytes are broadcast once and deserialized at most once per
+    python worker by the filter probes' loader
+    (``dist._payload_loader``); no driver-side collect of probe keys, so
+    ``df.where(bloom_contains_udf(b, spark)(col))`` scales with executor
+    count, not driver memory.
     """
     import uuid
 
-    import fastfilter_spark.operators.dist as _dist
+    from fastfilter_spark.operators.dist import _payload_loader
 
     if hashed_input is None:
         hashed_input = bool(getattr(bloom, "spark_hashed_input", False))
-    token = uuid.uuid4().hex
-    if spark is not None:
-        bc = spark.sparkContext.broadcast(bloom.to_bytes())
-        get_bytes = lambda: bc.value  # noqa: E731
-    else:
-        blob = bloom.to_bytes()
-        get_bytes = lambda: blob  # noqa: E731
+    load = _payload_loader(spark, uuid.uuid4().hex, bloom.to_bytes(),
+                           Bloom.from_bytes)
 
     @F.pandas_udf("boolean")
     def contains(s: pd.Series) -> pd.Series:
-        cached = _dist._worker_cache_get(token)
-        if cached is None:
-            cached = [Bloom.from_bytes(get_bytes())]
-            _dist._worker_cache_put(token, cached)
-        vals = s.to_numpy().astype(np.int64)
-        return pd.Series(cached[0].contains(vals))
+        return pd.Series(load().contains(s.to_numpy().astype(np.int64)))
 
     def probe(col):
         if isinstance(col, str):

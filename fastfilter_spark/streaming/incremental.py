@@ -26,7 +26,8 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from fastfilter_spark.operators.dist import (
-    FILTER_TABLE_SCHEMA, ShardedFilter, build_filter_rows, keys_with_shard,
+    FILTER_TABLE_SCHEMA, ShardedFilter, _complete_filter, build_filter_rows,
+    keys_with_shard,
 )
 
 # filter-table LOG row: one filter row per (shard, micro-batch that
@@ -165,21 +166,8 @@ class IncrementalFilterMaintainer:
         """Materialize the latest rows into a broadcastable ShardedFilter
         (driver holds one copy — fine for broadcastable sizes; use
         ``current_table`` + ``probe_via_join`` beyond that)."""
-        rows = [r.asDict() for r in self.current_table(spark).collect()]
-        present = {r["shard"] for r in rows}
-        num_shards = 1 << self.shard_bits
-        if len(present) < num_shards:
-            # shards with no keys yet: fill with a valid empty filter
-            # (works for every kind — see local.empty_filter)
-            from fastfilter_spark.operators.local import empty_filter
-            payload = empty_filter(self.kind).to_bytes()
-            rows += [
-                {"shard": s, "kind": self.kind, "num_shards": num_shards,
-                 "input_rows": 0, "distinct_keys": 0, "seed": 0,
-                 "size_bytes": len(payload), "build_ms": 0.0,
-                 "payload": payload}
-                for s in range(num_shards) if s not in present]
-        return ShardedFilter.from_filter_table(rows)
+        return _complete_filter(self.current_table(spark).collect(),
+                                self.kind, 1 << self.shard_bits)
 
     # -- maintenance -------------------------------------------------------
 

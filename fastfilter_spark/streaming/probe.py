@@ -23,10 +23,10 @@ Semantics (from the filters' one-sided error):
   across that bound, never over-drop.
 
 Each micro-batch is probed executor-side via the broadcast
-contains() pandas UDF (Arrow-batched; only the key column crosses
-the Python boundary) and survivors append to a parquet sink dir —
-at deployment scale point the sink at the object-store/Iceberg
-landing table instead.
+contains() Arrow UDF (only the key column crosses the Python
+boundary; a null key probes False) and survivors append to a parquet
+sink dir — at deployment scale point the sink at the
+object-store/Iceberg landing table instead.
 """
 
 from __future__ import annotations

@@ -190,3 +190,17 @@ def test_native_arity4_peels_beyond_shard_sizes():
     assert f.seed is not None
     sample = keys[:: 97]
     assert f.contain(sample).all()
+
+
+def test_kernel_cache_path_depends_on_isa():
+    """The .so is built with -march=native: executors on different CPUs
+    sharing one cache directory must get different binaries."""
+    import platform
+
+    from fastfilter_spark.functions.native import _isa, _so_path
+    src = b"int ff_probe;"
+    avx2 = _so_path(src, "x86_64:fpu sse2 avx2")
+    assert avx2 != _so_path(src, "x86_64:fpu sse2")
+    assert avx2 != _so_path(src, "aarch64:fp asimd")
+    assert avx2 == _so_path(src, "x86_64:fpu sse2 avx2")
+    assert _isa().startswith(platform.machine() + ":")

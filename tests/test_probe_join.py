@@ -1,5 +1,6 @@
 """Cogrouped join probe (the too-big-to-broadcast deployment mode)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from fastfilter_spark.operators.dist import build_sharded, probe_via_join
@@ -67,3 +68,35 @@ def test_register_sql_udf_probes_in_pure_sql(spark):
         "SELECT count(*) c FROM member_keys "
         "WHERE ff_contains_test(k)").first().c
     assert n_after < 200
+
+
+def test_probe_via_join_rejects_duplicate_shard_rows(spark, sf_dir):
+    """A filter table with two rows for one shard must raise, mirroring
+    from_filter_table (ADVICE.md dist.py:433: probing an arbitrary row
+    can silently pick a stale payload)."""
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    keys = li.select("l_orderkey").distinct().limit(200)
+    _, table = build_sharded(keys, "l_orderkey", kind="fuse8", shard_bits=1)
+    dup = table.unionAll(table)
+    with pytest.raises(Exception, match="rows for shard"):
+        probe_via_join(keys, "l_orderkey", dup).collect()
+
+
+def test_probe_via_join_autopersists_unmaterialized_table(spark):
+    """num_shards=None on a raw build plan must not execute the build
+    twice: the table is auto-persisted before the num_shards lookup, so
+    the cogroup probe reuses the materialized shards."""
+    from pyspark import StorageLevel
+
+    from fastfilter_spark.operators.dist import (
+        build_sharded_table, probe_via_join)
+
+    keys = spark.range(20_000).select(
+        F.xxhash64(F.col("id")).alias("key"))
+    ftable = build_sharded_table(keys, "key", kind="fuse8", shard_bits=2)
+    assert ftable.storageLevel == StorageLevel.NONE
+    out = probe_via_join(keys, "key", ftable, num_shards=None)
+    assert ftable.storageLevel != StorageLevel.NONE, \
+        "filter table was not pinned before the num_shards lookup"
+    assert out.where(F.col("member")).count() == 20_000
+    ftable.unpersist()

@@ -4,62 +4,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from fastfilter_spark.operators.dist import (
-    ShardedFilter, build_sharded, semi_join_prune,
-)
 from fastfilter_spark.operators.local import build_filter, empty_filter
-
-
-def test_semi_join_prune_same_key_name(spark, sf_dir):
-    """fact_key == dim_key must not raise an ambiguous-reference error."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    dim = orders.select(F.col("o_custkey")).distinct().limit(50)
-    sf, _ = build_sharded(dim, "o_custkey", kind="fuse8", shard_bits=0)
-    pruned = semi_join_prune(orders, "o_custkey", sf, dim, "o_custkey")
-    exact = orders.join(dim, "o_custkey", "left_semi")
-    assert pruned.count() == exact.count()
-
-
-def test_build_sharded_oversized_shard_bits(spark, sf_dir):
-    """More shards than distinct keys: empty shards fill with valid
-    empty filters instead of failing the build."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    small = li.select("l_orderkey").distinct().limit(10)
-    sf, _ = build_sharded(small, "l_orderkey", kind="fuse8", shard_bits=6)
-    assert sf.num_shards == 64
-    keys = np.array([r[0] for r in small.collect()], dtype=np.int64)
-    assert sf.contain_np(keys).all()
-
-
-def test_from_filter_table_rejects_duplicates(spark, sf_dir):
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    _, table = build_sharded(li, "l_orderkey", kind="fuse8", shard_bits=1)
-    rows = [r.asDict() for r in table.collect()]
-    with pytest.raises(ValueError, match="duplicate"):
-        ShardedFilter.from_filter_table(rows + [rows[0]])
-
-
-def test_worker_cache_distinguishes_rebuilt_filters(spark):
-    """Two filters with identical first/last shards but different middle
-    shards must not share worker-cached probe state (the incremental-
-    rebuild staleness scenario)."""
-    df1 = spark.range(0, 4000).select(F.col("id").alias("k"))
-    df2 = spark.range(0, 8000).select(F.col("id").alias("k"))
-    a, _ = build_sharded(df1, "k", kind="fuse8", shard_bits=2)
-    b, _ = build_sharded(df2, "k", kind="fuse8", shard_bits=2)
-    # force-share edge payloads so a content-prefix fingerprint would
-    # collide; the identity token must still separate them
-    b2 = ShardedFilter(kind=b.kind, shard_bits=b.shard_bits,
-                       payloads=[a.payloads[0]] + b.payloads[1:3]
-                       + [a.payloads[-1]])
-    # probe with A first (populates worker caches), then with b2
-    n_a = df1.where(a.contains_udf(spark)(F.col("k"))).count()
-    assert n_a == 4000
-    got_b2 = df1.where(b2.contains_udf(spark)(F.col("k"))).count()
-    # b2's middle shards differ from a's: the result must reflect B2's
-    # payloads, not a's cached filters.  Compute expectation driver-side.
-    exp = int(b2.contain_np(np.arange(4000, dtype=np.int64)).sum())
-    assert got_b2 == exp
 
 
 def test_empty_filter_all_kinds():

@@ -7,11 +7,6 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-import fastfilter_spark.operators.dist as dist
-from fastfilter_spark.operators.dist import (
-    build_sharded, build_sharded_table, semi_join_prune,
-)
-
 
 # ---------------------------------------------------------------------------
 # ADVICE: _next_seq must not map read errors to seq=1
@@ -88,37 +83,6 @@ def test_bloom_probe_null_keys_are_false(spark, string_keys):
     expect = {(str(i) if string_keys else i) for i in range(1000)
               if i % 3 != 0}
     assert expect <= members               # zero false negatives
-
-
-# ---------------------------------------------------------------------------
-# ADVICE: worker cache is true LRU, not FIFO
-# ---------------------------------------------------------------------------
-
-def test_worker_cache_hit_refreshes_recency():
-    saved = dict(dist._worker_filter_cache)
-    try:
-        dist._worker_filter_cache.clear()
-        for i in range(dist._WORKER_CACHE_MAX):
-            dist._worker_cache_put(f"t{i}", [i])
-        # touch the oldest -> it must now survive the next eviction
-        assert dist._worker_cache_get("t0") == [0]
-        dist._worker_cache_put("fresh", [99])
-        assert "t0" in dist._worker_filter_cache
-        assert "t1" not in dist._worker_filter_cache  # true LRU victim
-        assert dist._worker_cache_get("missing") is None
-    finally:
-        dist._worker_filter_cache.clear()
-        dist._worker_filter_cache.update(saved)
-
-
-# ---------------------------------------------------------------------------
-# ADVICE: build_sharded_table rejects bad arity on the driver
-# ---------------------------------------------------------------------------
-
-def test_build_sharded_table_rejects_arity_5(spark):
-    df = spark.range(100).select(F.col("id").alias("k"))
-    with pytest.raises(ValueError, match="arity must be 3 or 4"):
-        build_sharded_table(df, "k", kind="fuse8", shard_bits=1, arity=5)
 
 
 # ---------------------------------------------------------------------------
@@ -229,74 +193,6 @@ def test_ivf_fit_covers_clusters_on_sorted_input(spark):
 
 
 # ---------------------------------------------------------------------------
-# VERDICT #5: semi_join_prune broadcasts explicitly
-# ---------------------------------------------------------------------------
-
-def test_semi_join_prune_broadcasts_without_threshold(spark, sf_dir):
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    dim = orders.where(F.col("o_orderstatus") == "F").select("o_orderkey")
-    sf, _ = build_sharded(dim, "o_orderkey", kind="fuse8", shard_bits=1)
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        out = semi_join_prune(li, "l_orderkey", sf, dim, "o_orderkey")
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
-        expect = li.join(dim.withColumnRenamed("o_orderkey", "k"),
-                         li["l_orderkey"] == F.col("k"), "left_semi")
-        assert out.count() == expect.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-
-# ---------------------------------------------------------------------------
-# VERDICT #9: checkpoint resume fingerprint fast path
-# ---------------------------------------------------------------------------
-
-def test_checkpoint_resume_skips_recount_when_fingerprint_matches(
-        spark, sf_dir, tmp_path):
-    from tests.conftest import spy_collect
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    ckpt = str(tmp_path / "ck")
-    build_sharded_table(li, "l_orderkey", kind="fuse8", shard_bits=2,
-                        checkpoint_dir=ckpt)
-    assert os.path.exists(os.path.join(ckpt, "_input_fingerprint"))
-
-    collected_schemas = []
-    with spy_collect(collected_schemas):
-        build_sharded_table(li, "l_orderkey", kind="fuse8", shard_bits=2,
-                            checkpoint_dir=ckpt)
-    # the per-shard recount job (schema [shard, n]) must NOT run when
-    # the persisted fingerprint matches the current input
-    assert ["shard", "n"] not in collected_schemas, collected_schemas
-
-    # fingerprint gone -> authoritative recount runs again (and passes)
-    os.remove(os.path.join(ckpt, "_input_fingerprint"))
-    collected_schemas.clear()
-    with spy_collect(collected_schemas):
-        build_sharded_table(li, "l_orderkey", kind="fuse8", shard_bits=2,
-                            checkpoint_dir=ckpt)
-    assert ["shard", "n"] in collected_schemas
-
-
-def test_checkpoint_fingerprint_distinguishes_queries(spark, sf_dir,
-                                                      tmp_path):
-    """Two different queries over the SAME parquet files are different
-    datasets: the fingerprint must not let a full-table resume skip
-    validation of a subset-built checkpoint."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    small = li.where(F.col("l_orderkey") % 3 == 0)
-    ckpt = str(tmp_path / "ck2")
-    build_sharded_table(small, "l_orderkey", kind="fuse8", shard_bits=2,
-                        checkpoint_dir=ckpt)
-    with pytest.raises(ValueError, match="different input"):
-        build_sharded_table(li, "l_orderkey", kind="fuse8", shard_bits=2,
-                            checkpoint_dir=ckpt)
-
-
-# ---------------------------------------------------------------------------
 # review: NULL keys through the bloom build/probe path
 # ---------------------------------------------------------------------------
 
@@ -328,41 +224,3 @@ def test_bloom_null_keys_excluded_and_probe_false(spark):
 # ---------------------------------------------------------------------------
 # round-3 review: behavioral spot-check of resumed checkpoint payloads
 # ---------------------------------------------------------------------------
-
-def test_checkpoint_spot_check_catches_stale_payload(spark, tmp_path):
-    """Row counts and the input fingerprint CANNOT see a payload that is
-    stale because the code (or the keys) changed under identical counts
-    — e.g. an arity-4 checkpoint written by an older kernel whose cell
-    map differed.  The resume path must probe sampled input keys
-    against resumed payloads and refuse when an inserted key probes
-    negative (a compatible payload can never false-negative)."""
-    import shutil
-    from pyspark.sql import functions as F
-    dir_a = str(tmp_path / "ck_a")
-    dir_b = str(tmp_path / "ck_b")
-    df_a = spark.range(2000).select(F.xxhash64("id").alias("key"))
-    df_b = spark.range(2000, 4000).select(F.xxhash64("id").alias("key"))
-    build_sharded_table(df_a, "key", kind="fuse8", shard_bits=0,
-                        checkpoint_dir=dir_a).collect()
-    build_sharded_table(df_b, "key", kind="fuse8", shard_bits=0,
-                        checkpoint_dir=dir_b).collect()
-    # sanity: an honest resume passes the spot-check silently
-    build_sharded_table(df_a, "key", kind="fuse8", shard_bits=0,
-                        checkpoint_dir=dir_a).collect()
-    # swap A's payload part-files for B's: identical schema, identical
-    # per-shard input_rows (2000), same num_shards/kind/arity — every
-    # metadata check passes, only behavior differs
-    for name in os.listdir(dir_a):
-        if name.endswith(".parquet"):
-            os.remove(os.path.join(dir_a, name))
-    for name in os.listdir(dir_b):
-        if name.endswith(".parquet"):
-            shutil.copy(os.path.join(dir_b, name),
-                        os.path.join(dir_a, name))
-    with pytest.raises(ValueError, match="probes FALSE"):
-        build_sharded_table(df_a, "key", kind="fuse8", shard_bits=0,
-                            checkpoint_dir=dir_a).collect()
-    # explicit opt-out still works for power users
-    build_sharded_table(df_a, "key", kind="fuse8", shard_bits=0,
-                        checkpoint_dir=dir_a,
-                        validate_checkpoint=False).collect()

@@ -15,7 +15,6 @@ import glob
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
 from fastfilter_spark.operators.graph import connected_components
 
@@ -90,28 +89,6 @@ def test_sessionize_ntz_is_timezone_and_dst_independent(spark):
     finally:
         spark.conf.set("spark.sql.session.timeZone", old_tz)
     assert got == {1: 1, 2: 1, 3: 1, 4: 2}
-
-
-# -- probe_via_join auto-persist ----------------------------------------------
-
-def test_probe_via_join_autopersists_unmaterialized_table(spark):
-    """num_shards=None on a raw build plan must not execute the build
-    twice: the table is auto-persisted before the num_shards lookup, so
-    the cogroup probe reuses the materialized shards."""
-    from pyspark import StorageLevel
-
-    from fastfilter_spark.operators.dist import (
-        build_sharded_table, probe_via_join)
-
-    keys = spark.range(20_000).select(
-        F.xxhash64(F.col("id")).alias("key"))
-    ftable = build_sharded_table(keys, "key", kind="fuse8", shard_bits=2)
-    assert ftable.storageLevel == StorageLevel.NONE
-    out = probe_via_join(keys, "key", ftable, num_shards=None)
-    assert ftable.storageLevel != StorageLevel.NONE, \
-        "filter table was not pinned before the num_shards lookup"
-    assert out.where(F.col("member")).count() == 20_000
-    ftable.unpersist()
 
 
 # -- conditional broadcasts ---------------------------------------------------
